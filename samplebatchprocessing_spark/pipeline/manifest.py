@@ -13,8 +13,11 @@ Reference pipeline (danilop/SampleBatchProcessing):
 - GetJobs.py:37-40    SQS delete-on-success             -> at-least-once
 
 Spark mapping:
-- file listing + download  -> `binaryFile` source (one task per file;
-  `spark.sql.files.maxPartitionBytes` bounds task size at 100 TB)
+- file listing + download  -> `binaryFile` source (files packed into
+  scan splits of at most `spark.sql.files.maxPartitionBytes`, each
+  file costing its length plus `spark.sql.files.openCostInBytes`, so
+  task size stays bounded at 100 TB; a stream's per-batch re-listing
+  runs in one wave of cores, see ``session._size_listing``)
 - job message              -> manifest DataFrame (same 5 columns)
 - dispatch                 -> `filter(action = 'process')` + equi-join
   manifest x file content on file_name

@@ -2476,7 +2476,8 @@ def x130_hash_col():
 
 #: x130's modulus and the fan-out of the two-level exact reduction.
 #: 4096 buckets x 2^33 rows of bigint-safe per-bucket accumulation
-#: covers ~3.5e16 rows per group — far past 100 TB lineitem.
+#: covers ~3.5e13 rows per group (2^45) — far past 100 TB lineitem
+#: (~7e11 rows per group).
 _X130_P = 1_000_000_007
 _X130_BUCKETS = 4096
 

@@ -65,6 +65,27 @@ def get_spark(app_name: str = "samplebatchprocessing_spark",
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    return _size_listing(spark)
+
+
+#: Task cap of Spark's distributed file listing (default 10,000).
+LISTING_PARALLELISM = (
+    "spark.sql.sources.parallelPartitionDiscovery.parallelism")
+
+
+def _size_listing(spark: SparkSession) -> SparkSession:
+    """Cap Spark's distributed file listing at one wave of cores.
+
+    Past ``parallelPartitionDiscovery.threshold`` (32) paths, Spark
+    lists them in a job of ``min(paths, parallelism)`` tasks, and a
+    file stream does so for every micro-batch's new files.  At the
+    default cap of 10,000 that is one task per file, each paying a
+    task's fixed cost to stat one path.  ``defaultParallelism`` keeps
+    listing distributed at ``files / cores`` paths per task.  Under
+    dynamic allocation set ``spark.default.parallelism``; see SCALE.md
+    "File listing: one wave of cores"."""
+    spark.conf.set(LISTING_PARALLELISM,
+                   str(spark.sparkContext.defaultParallelism))
     return spark
 
 
@@ -125,11 +146,12 @@ def apply_engine_conf(spark: SparkSession) -> SparkSession:
     session (the driver hands us one in ``__spark_entry__.entry``).
 
     Only runtime-mutable keys are set; static ones (master, memory)
-    are the caller's business.
+    are the caller's business.  File listing is sized to the
+    session's cores exactly as in :func:`get_spark`.
     """
     for k, v in ENGINE_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             pass  # static conf on a live session — keep caller's value
-    return spark
+    return _size_listing(spark)

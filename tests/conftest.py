@@ -151,11 +151,31 @@ _SLOW_TESTS = frozenset({
 })
 
 
+def _check_slow_tests_collected(config, nodes: set[str]) -> None:
+    """Fail collection when a ``_SLOW_TESTS`` id names a test in a
+    collected file that was not itself collected: a renamed test or
+    parameter would otherwise leave the slow tier silently.  Skipped
+    when the command line collects files only in part on purpose
+    (``file::test`` arguments, ``--lf``)."""
+    if (any("::" in str(a) for a in config.args)
+            or config.getoption("lf", default=False)):
+        return
+    files = {n.split("::")[0] for n in nodes}
+    stale = sorted(t for t in _SLOW_TESTS
+                   if t.split("::")[0] in files and t not in nodes)
+    if stale:
+        raise pytest.UsageError(
+            "tests/conftest.py _SLOW_TESTS lists tests that were not "
+            "collected from their file: " + ", ".join(stale))
+
+
 def pytest_collection_modifyitems(config, items):
     import re as _re
 
     from samplebatchprocessing_spark.queries import DRIVER_WINDOW
     win = set(DRIVER_WINDOW)
+    nodes = {item.nodeid.split("tests/")[-1] for item in items}
+    _check_slow_tests_collected(config, nodes)
     for item in items:
         node = item.nodeid.split("tests/")[-1]
         mark = node in _SLOW_TESTS

@@ -187,6 +187,63 @@ def test_watch_prefix_retry_dedupes_log(spark, bucket):
     assert all(r["ok"] for r in rows)
 
 
+def _stages_since(spark, last: int) -> list:
+    """Status-store stages newer than ``last`` (the store lists newest
+    first; py4j needs the full 5-argument ``stageList`` signature)."""
+    gw = spark.sparkContext._gateway
+    seq = spark.sparkContext._jsc.sc().statusStore().stageList(
+        [], False, False, gw.new_array(gw.jvm.double, 0), [])
+    out, it = [], seq.iterator()
+    while it.hasNext():
+        s = it.next()
+        if s.stageId() <= last:
+            break
+        out.append(s)
+    return out
+
+
+def test_watch_prefix_lists_backlog_in_one_wave(spark, tmp_path):
+    """A drain past the listing threshold (32 paths) re-stats its
+    micro-batch's files in a distributed job.  That job must run in
+    one wave of cores, not one task per file, and the drain stays
+    byte-exact."""
+    from samplebatchprocessing_spark.pipeline.manifest import watch_prefix
+    n = max(40, 2 * spark.sparkContext.defaultParallelism + 8)
+    bucket = str(tmp_path)
+    in_dir = os.path.join(bucket, "input")
+    os.makedirs(in_dir)
+    for i in range(n):
+        with open(os.path.join(in_dir, f"f{i:04d}.bin"), "wb") as f:
+            f.write(hashlib.sha256(str(i).encode()).digest() * (1 + i))
+
+    last = max((s.stageId() for s in _stages_since(spark, -1)),
+               default=-1)
+    rows = watch_prefix(spark, bucket).collect()
+    widths = [s.numTasks() for s in _stages_since(spark, last)]
+    assert widths and max(widths) < n, \
+        f"a stage ran one task per file: widths {widths}, {n} files"
+
+    assert len(rows) == n and all(r["ok"] for r in rows)
+    for name in os.listdir(in_dir):
+        with open(os.path.join(in_dir, name), "rb") as a, \
+                open(os.path.join(bucket, "output", name + ".out"),
+                     "rb") as b:
+            assert a.read() == b.read(), name
+
+
+def test_engine_sessions_list_files_in_one_wave(spark):
+    """``get_spark`` (the ``spark`` fixture) and ``apply_engine_conf``
+    (an externally built session) both cap file listing at the
+    session's cores."""
+    from samplebatchprocessing_spark.session import (
+        LISTING_PARALLELISM, apply_engine_conf)
+    cores = str(spark.sparkContext.defaultParallelism)
+    assert spark.conf.get(LISTING_PARALLELISM) == cores
+    vanilla = spark.newSession()
+    assert vanilla.conf.get(LISTING_PARALLELISM) == "10000"
+    assert apply_engine_conf(vanilla).conf.get(LISTING_PARALLELISM) == cores
+
+
 def test_watch_daemon_two_drops_and_stop(spark, bucket, sf_smoke):
     """The daemon form of watch (GetJobs.py:21-23's infinite loop):
     drains the startup backlog, picks up a file dropped WHILE RUNNING
