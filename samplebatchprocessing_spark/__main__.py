@@ -129,119 +129,51 @@ def cmd_watch(args: argparse.Namespace) -> int:
     return 0
 
 
-def _store_from_uri(index_root: str):
-    """(store, root_prefix, spark_uri) for an object-store index
-    root, or None for a plain POSIX path.
-
-    - ``mock:///abs/path/to/index-root`` — the file-backed
-      :class:`LocalObjectStoreClient`.  Any bucket/root split along
-      the same absolute path is behaviorally equivalent for this
-      client (keys resolve to the same backing files), so the
-      canonical split is deterministic: the client roots at the
-      uri's PARENT directory and the final path component is the
-      index-root key.  Spark reads the double's backing files.
-    - ``s3://bucket/prefix`` — the boto3
-      :class:`S3ObjectStoreClient` (import-guarded; needs
-      credentials + hadoop-aws jars at runtime, FIXTURES.md ask #3);
-      Spark reads ``s3a://bucket/<key>`` uris."""
-    from .pipeline.manifest import (LocalObjectStoreClient,
-                                    S3ObjectStoreClient, _split_scheme)
-    scheme, rest = _split_scheme(index_root)
-    if scheme == "":
-        return None
-    if scheme == "mock":
-        path = ("/" + rest.lstrip("/")).rstrip("/")
-        parent, key = os.path.dirname(path), os.path.basename(path)
-        if not key or not os.path.isdir(parent):
-            raise ValueError(
-                f"mock uri {index_root!r}: parent directory "
-                f"{parent!r} must exist (the bucket double)")
-        store = LocalObjectStoreClient(parent)
-        return store, key, store.fs_path
-    if scheme == "s3":
-        bucket, _, root = rest.partition("/")
-        if not bucket or not root:
-            raise ValueError(
-                f"s3 uri {index_root!r}: expected s3://bucket/prefix")
-        return (S3ObjectStoreClient(bucket), root,
-                lambda key: f"s3a://{bucket}/{key}")
-    raise ValueError(f"unsupported index-root scheme {scheme!r} "
-                     f"(supported: plain path, mock://, s3://)")
-
-
 def cmd_maintain(args: argparse.Namespace) -> int:
-    """The maintenance-daemon CLI (r11, VERDICT r10 #3): run the
-    census -> due? -> rewrite -> publish sweep for a versioned index
-    root, either once (``--once``, the AvailableNow analog — cron
-    drives the cadence) or as a continuous loop with the same
-    SIGINT/SIGTERM graceful-stop wiring as ``watch`` (GetJobs.py:
-    63-65,80's signal discipline applied to index upkeep)."""
-    from .operators import maintenance
+    """The maintenance-daemon CLI: run the census -> due? -> rewrite
+    -> publish sweep for a versioned root — a plain path,
+    ``mock:///abs/path`` or ``s3://bucket/prefix``
+    (``publish.open_root``) — either once (``--once``, the
+    AvailableNow analog — cron drives the cadence) or as a
+    continuous loop with the same SIGINT/SIGTERM graceful-stop
+    wiring as ``watch`` (GetJobs.py:63-65,80's signal discipline
+    applied to index upkeep)."""
+    from .operators import maintenance, publish
 
+    if args.kind in ("vocab", "nb"):
+        if not args.fresh_parquet:
+            print(f"maintain {args.kind}: --fresh-parquet is required "
+                  f"(the retrain due-predicate measures drift on a "
+                  f"fresh slice)", file=sys.stderr)
+            return 2
+        if args.index_root.startswith("s3://"):
+            print(f"maintain {args.kind}: trained artifacts are read "
+                  f"with open(), so their roots are local (a plain "
+                  f"path or mock://)", file=sys.stderr)
+            return 2
     spark = _spark()
-    if args.kind in ("vocab", "nb") and not args.fresh_parquet:
-        print(f"maintain {args.kind}: --fresh-parquet is required "
-              f"(the retrain due-predicate measures drift on a "
-              f"fresh slice)", file=sys.stderr)
-        return 2
+    pub = publish.open_root(args.index_root, cas=args.cas)
 
     def _fresh():
         # re-read per sweep: daemon mode should see the slice as it
         # is NOW, not as it was at startup
         return spark.read.parquet(args.fresh_parquet)
 
-    # index_root may be an OBJECT-STORE uri (r13): route the index
-    # kinds to the store-native sweep twins, with --cas electing the
-    # multi-maintainer conditional-write pointer mode.
-    store_parts = _store_from_uri(args.index_root)
-    if store_parts is not None:
-        if args.kind in ("vocab", "nb"):
-            print(f"maintain {args.kind}: trained-artifact roots are "
-                  f"POSIX paths (the vocab/NB artifacts publish "
-                  f"through the filesystem lifecycle); store uris "
-                  f"cover the index kinds", file=sys.stderr)
-            return 2
-        store, root, spark_uri = store_parts
-        sweeps = {
-            "lsh": lambda: maintenance.lsh_maintenance_sweep_store(
-                spark, store, root, cas=args.cas,
-                max_files_per_bucket=args.threshold,
-                spark_uri=spark_uri),
-            "postings": lambda:
-                maintenance.postings_maintenance_sweep_store(
-                    spark, store, root, cas=args.cas,
-                    max_files_per_bucket=args.threshold,
-                    spark_uri=spark_uri),
-            "ivf": lambda: maintenance.ivf_maintenance_sweep_store(
-                spark, store, root, cas=args.cas,
-                n_cells=args.n_cells,
-                skew_threshold=args.threshold,
-                spark_uri=spark_uri),
-        }
-    else:
-        sweeps = {
-            "lsh": lambda: maintenance.lsh_maintenance_sweep(
-                spark, args.index_root,
-                max_files_per_bucket=args.threshold),
-            "postings": lambda: maintenance.postings_maintenance_sweep(
-                spark, args.index_root,
-                max_files_per_bucket=args.threshold),
-            "ivf": lambda: maintenance.ivf_maintenance_sweep(
-                spark, args.index_root, n_cells=args.n_cells,
-                skew_threshold=args.threshold),
-            "vocab": lambda: maintenance.vocab_maintenance_sweep(
-                spark, args.index_root, _fresh(),
-                n_merges=args.n_merges,
-                max_drift_x1000=args.max_drift),
-            "nb": lambda: maintenance.nb_maintenance_sweep(
-                spark, args.index_root, _fresh(),
-                pos_col=args.pos_col,
-                max_oov_x1000=args.max_oov,
-                max_prior_drift_x1000=args.max_prior_drift),
-        }
-    sweep = sweeps[args.kind]
+    sweeps = {
+        "vocab": lambda: maintenance.vocab_maintenance_sweep(
+            spark, pub, _fresh(), n_merges=args.n_merges,
+            max_drift_x1000=args.max_drift),
+        "nb": lambda: maintenance.nb_maintenance_sweep(
+            spark, pub, _fresh(), pos_col=args.pos_col,
+            max_oov_x1000=args.max_oov,
+            max_prior_drift_x1000=args.max_prior_drift),
+    }
+    sweep = sweeps.get(args.kind, lambda: maintenance.compaction_sweep(
+        spark, pub, args.kind, threshold=args.threshold,
+        n_cells=args.n_cells))
 
-    def _print(r: dict) -> None:
+    def tick() -> None:
+        r = sweep()
         if "files_before" in r:
             detail = (f"files {r['files_before']} -> "
                       f"{r['files_after']}")
@@ -257,11 +189,10 @@ def cmd_maintain(args: argparse.Namespace) -> int:
               f"{detail}", flush=True)
 
     if args.once:
-        _print(sweep())
+        tick()
         return 0
 
-    d = maintenance.maintenance_daemon([sweep],
-                                       poll_seconds=args.poll)
+    d = maintenance.maintenance_daemon([tick], poll_seconds=args.poll)
     stop = threading.Event()
 
     def _on_signal(signum, _frame):
@@ -273,17 +204,10 @@ def cmd_maintain(args: argparse.Namespace) -> int:
             for s in (signal.SIGINT, signal.SIGTERM)}
     print(f"maintaining {args.kind} index {args.index_root} "
           f"every {args.poll}s (SIGINT to stop)", flush=True)
-    seen = 0
     try:
-        while not stop.is_set():
-            stop.wait(0.5)
-            while seen < len(d.reports):   # stream reports as they land
-                _print(d.reports[seen])
-                seen += 1
+        while not stop.wait(0.5):
+            pass
         d.stop()                           # graceful: finish in-flight
-        while seen < len(d.reports):
-            _print(d.reports[seen])
-            seen += 1
     finally:
         for s, h in prev.items():
             signal.signal(s, h)
@@ -362,9 +286,9 @@ def main(argv: list[str] | None = None) -> int:
                     help="nb retrain bound: class-prior shift per "
                     "mille")
     pm.add_argument("--cas", action="store_true",
-                    help="object-store roots only: publish/prune the "
-                    "pointer via conditional writes (If-Match), so "
-                    "multiple concurrent maintainers lose no updates")
+                    help="publish/prune the pointer via conditional "
+                    "writes (If-Match), so multiple concurrent "
+                    "maintainers lose no updates")
     pm.set_defaults(fn=cmd_maintain)
 
     args = p.parse_args(argv)

@@ -25,14 +25,14 @@ DEC = "decimal(30,6)"
 #: buffer update — measured as ~2x the whole of a1 under the noop
 #: action.  The exact value x rendered at scale 6 is an integer
 #: u = unscaled(x) < 2^63 of millionths; u splits as
-#: u = (u >> 20) * 2^20 + pmod(u, 2^20), and BOTH halves sum exactly
-#: in bigints far past 100 TB: |sum(lo)| < n * 2^20 (exact to
-#: ~8.8e12 rows per group) and |sum(hi)| < n * |x|_max / 2^20.  The
-#: two bigint totals recombine into the identical decimal(38,6) on
-#: the final (group-count-sized) rows, where BigDecimal cost is
-#: irrelevant.  Domain bound (documented, was 1e24 on the decimal
-#: path): |x| <= 9.2e12 so u fits a bigint — every caller sums
-#: monetary/quantity/score columns orders of magnitude below that.
+#: u = (u >> 20) * 2^20 + pmod(u, 2^20), and both halves sum exactly
+#: in bigints: |sum(lo)| < n * 2^20 and |sum(hi)| <= n * (|u|_max >>
+#: 20).  The two bigint totals recombine into the identical
+#: decimal(38,6) on the final (group-count-sized) rows, where
+#: BigDecimal cost is irrelevant.  The exact envelope is the JOINT
+#: bound stated in ``dsum``'s docstring (it was 1e24 on the decimal
+#: path); every caller sums monetary/quantity/score columns orders
+#: of magnitude inside it.
 _DSUM_SHIFT = 20
 _DSUM_LO = 1 << _DSUM_SHIFT
 _DSUM_SCALE = 1_000_000
@@ -50,14 +50,30 @@ def _dec_sum(c: Column) -> Column:
 
 
 def dsum(col: Column | str, alias: str | None = None) -> Column:
-    """Order-independent sum of a double column via exact decimals."""
+    """Order-independent sum of a double column via exact decimals.
+
+    Exact envelope, per group of N non-NULL rows whose largest
+    magnitude is |x| (u = |x| * 1e6, the value in millionths):
+
+    - u < 2^63, i.e. |x| <= 9.2e12, so each value casts to a bigint;
+    - N * 2^20 < 2^63 (N < ~8.8e12 rows) for the lo half;
+    - N * (u >> 20) < 2^63 for the hi half, i.e. N * |x| < ~9.7e18:
+      |x| <= 1e6 keeps the lo bound binding, while |x| = 9.2e12
+      allows only N < ~1.05e6 rows.
+
+    Outside it the cast or a half's sum overflows, and under ANSI
+    (Spark 4's default; ``ENGINE_CONF`` does not change it) the query
+    raises CAST_OVERFLOW / ARITHMETIC_OVERFLOW instead of returning
+    a wrapped sum (both edges test-pinned in
+    tests/test_twin_types.py)."""
     c = F.col(col) if isinstance(col, str) else col
     out = _dec_sum(c).cast("double")
     return out.alias(alias) if alias else out
 
 
 def davg(col: Column | str, alias: str | None = None) -> Column:
-    """Order-independent mean: exact decimal sum / count, one double div."""
+    """Order-independent mean: exact decimal sum / count, one double
+    div.  The sum has :func:`dsum`'s joint envelope."""
     c = F.col(col) if isinstance(col, str) else col
     out = _dec_sum(c).cast("double") / F.count(c)
     return out.alias(alias) if alias else out

@@ -10,9 +10,14 @@ vocabulary, a retrain must not disturb in-flight scoring, and a
 crash between write and publish must leave the old model live.
 
 This module gives each artifact a LAYOUT format inside a published
-root; ``publish.publish`` / ``publish.resolve`` do the swapping, so
+root, and the index lifecycle does the swapping: a writer names a
+fresh layout with ``publish.open_root(root).new_layout_dir()``,
+writes it at the publisher's ``data_path`` and publishes it; the
+readers here take the ROOT and go through ``publish.resolve``.  So
 models and indexes share one lifecycle (and one maintenance-daemon
-shape).
+shape), on any local root — a plain path or ``mock://``.  Artifact
+files are read and written with ``open()``, so an ``s3://`` root
+does not serve them.
 
 Artifact sizing drives the storage choice:
 
@@ -49,8 +54,8 @@ def bpe_vocab_write(merges, layout_dir: str,
     ``merges``: the ``text.bpe_train_merges`` output — (round, left,
     right, merged, pair_count) tuples in training order.  The order
     IS the model (rules apply sequentially), so it is preserved
-    verbatim.  The layout is a plain directory so ``publish.publish``
-    can version it like any index layout.
+    verbatim.  The layout is a plain directory so the publisher can
+    version it like any index layout.
 
     ``fertility_x1000`` (r12, VERDICT r11 #4): the AT-TRAINING encode
     fertility — ``1000 * pieces DIV words`` measured on the training

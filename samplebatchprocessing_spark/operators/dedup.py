@@ -809,7 +809,7 @@ def lsh_index_probe(spark, index_dir: str, batch: DataFrame,
     (the in-flight L6 path) — locked by the x132 registry row.
 
     ``index_dir`` may be a plain layout directory or a VERSIONED
-    index root (``publish.publish``): the pointer is resolved ONCE
+    index root (``publish.open_root``): the pointer is resolved ONCE
     up front, so the whole probe reads a single consistent version
     even if a compaction publishes mid-query."""
     index_dir = _resolve_layout(index_dir)

@@ -1,47 +1,50 @@
-"""Index MAINTENANCE sweeps — the cadence loop that actually RUNS
-the measured due-predicates (r11, VERDICT r10 #3).
+"""Index MAINTENANCE sweeps — the cadence loop that RUNS the
+measured due-predicates.
 
-Round 10 left the lifecycle matrix complete but inert: the
-maintenance passes (``dedup.lsh_index_compact``, ``text.
+The maintenance passes (``dedup.lsh_index_compact``, ``text.
 postings_index_compact``, ``similarity.ivf_index_recluster``) and
-their decision predicates (``similarity.recluster_is_due``, the l17
-small-file decay story) existed, but nothing executed the loop
-census -> due? -> rewrite -> publish.  This module is that loop,
-shaped like ``pipeline.manifest.watch_daemon``: one-shot ``*_sweep``
-entry points (the ``Trigger.AvailableNow`` analog — run the decision
-once, act if due, return a report row) plus
-:func:`maintenance_daemon` (the ``ProcessingTime`` analog — a
-caller-owned background loop over the sweeps with graceful stop,
-where the CLI wires SIGINT exactly as ``__main__.cmd_watch`` does
-for the file watcher).
+their decision predicates (:func:`compact_is_due`,
+``similarity.recluster_is_due``) are executed here as the loop
+census -> due? -> rewrite -> publish.  The module is shaped like
+``pipeline.manifest.watch_daemon``: one-shot sweeps (the
+``Trigger.AvailableNow`` analog — run the decision once, act if
+due, return a report row) plus :func:`maintenance_daemon` (the
+``ProcessingTime`` analog — a caller-owned background loop over the
+sweeps with graceful stop, where the CLI wires SIGINT exactly as
+``__main__.cmd_watch`` does for the file watcher).
 
-Every sweep follows the same invariant chain:
-1. CENSUS the live layout (``publish.resolve`` — one consistent
-   version) with an o(index-metadata) probe;
+One sweep shape over one publisher (``publish.open_root`` — a plain
+path, ``mock://`` or ``s3://`` root alike):
+1. CENSUS the live layout (one consistent version) with an
+   o(index-metadata) probe;
 2. apply the PURE integer due-predicate (unit-testable apart from
-   the operator it steers — the ``orientation_is_skewed``
-   discipline);
-3. if due, rewrite into a FRESH layout directory
-   (``publish.new_layout_dir`` — never in place, ADVICE r10) while
-   probes keep serving the old version;
+   the operator it steers);
+3. if due, rewrite into a FRESH layout (``new_layout_dir`` — never
+   in place) while probes keep serving the old version;
 4. PUBLISH the pointer atomically and prune retired layouts beyond
    the read horizon (keep >= 2, the m10 vacuum-horizon rule).
 
-Scale (100 TB): the census is bounded driver metadata (file counts /
-one cell-keyed aggregate); the rewrite is the already-priced
-maintenance pass, amortized over the cadence; the swap is O(bytes of
-one JSON pointer).  A sweep that crashes mid-rewrite leaves the
-pointer untouched — readers never see the partial layout and the
-next sweep retries into a fresh directory.
+One table: :data:`SWEEP_KINDS` gives each index family (lsh,
+postings, ivf) its census, due-predicate and rewrite, and
+:func:`compaction_sweep` runs the chain for any of them.  The two
+trained-artifact sweeps (:func:`vocab_maintenance_sweep`,
+:func:`nb_maintenance_sweep`) measure a fresh slice against the live
+model instead, then publish the same way.
+
+Scale (100 TB): the census is bounded driver metadata (one paged key
+listing / one cell-keyed aggregate); the rewrite is the
+already-priced maintenance pass, amortized over the cadence; the
+swap is one pointer PUT.  A sweep that crashes mid-rewrite leaves
+the pointer untouched — readers never see the partial layout and
+the next sweep retries into a fresh layout.
 """
 
 from __future__ import annotations
 
-import glob
-import os
+from typing import Callable, NamedTuple
 
-from . import publish
 from .dedup import lsh_index_compact
+from .publish import POINTER
 from .similarity import (ivf_cell_census, ivf_centroids_write,
                          ivf_index_recluster, recluster_is_due)
 from .text import postings_index_compact
@@ -52,17 +55,26 @@ REPORT_SCHEMA = ("index_root string, kind string, due boolean, "
                  "files_after int")
 
 
-def bucket_file_census(layout_dir: str) -> tuple[int, int, int]:
-    """(max_files_in_one_bucket, n_nonempty_buckets, total_files)
-    over a bucket-partitioned layout (LSH band index / postings
-    index) — the small-file decay measurement.  Driver-side glob of
-    directory entries: o(file count) metadata, never data."""
-    counts = [len(glob.glob(os.path.join(b, "*.parquet")))
-              for b in glob.glob(os.path.join(layout_dir, "bucket=*"))]
-    counts = [c for c in counts if c > 0]
+def store_bucket_census(store, layout_key: str) -> tuple[int, int, int]:
+    """(max files in one bucket, nonempty buckets, total files) over
+    a bucket-partitioned layout (LSH band index / postings index) —
+    the small-file decay measurement.  Pages the layout's keys
+    (memory bounded by the page size, never the key count) and
+    counts ``*.parquet`` objects per ``bucket=N`` key segment:
+    metadata, never data."""
+    counts: dict[str, int] = {}
+    prefix = layout_key.rstrip("/") + "/"
+    for page in store.list_pages(prefix):
+        for key in page:
+            if not key.endswith(".parquet"):
+                continue
+            rest = key[len(prefix):]
+            seg = rest.split("/", 1)[0]
+            if seg.startswith("bucket="):
+                counts[seg] = counts.get(seg, 0) + 1
     if not counts:
         return 0, 0, 0
-    return max(counts), len(counts), sum(counts)
+    return max(counts.values()), len(counts), sum(counts.values())
 
 
 def compact_is_due(max_files: int, threshold: int = 4) -> bool:
@@ -80,229 +92,114 @@ def compact_is_due(max_files: int, threshold: int = 4) -> bool:
     return max_files >= threshold
 
 
-def _require_versioned(index_root: str, kind: str) -> str:
-    if publish.current_version(index_root) is None:
+def _live(pub, kind: str) -> tuple[str, int]:
+    """(live layout key, version) of a versioned root; a sweep on an
+    unversioned root has nowhere to swap to."""
+    version = pub.current_version()
+    if version is None:
         raise ValueError(
-            f"{kind} sweep needs a VERSIONED index root (no "
-            f"{publish.POINTER} under {index_root!r}): build into "
-            f"publish.new_layout_dir(root), then publish.publish it "
-            f"— an unversioned directory has nowhere to swap to")
-    return publish.resolve(index_root)
+            f"{kind} sweep needs a VERSIONED index root (no {POINTER} "
+            f"under {pub.root!r}): build into pub.new_layout_dir(), "
+            f"then pub.publish() it")
+    return pub.resolve(), version
 
 
-def lsh_maintenance_sweep(spark, index_root: str,
-                          max_files_per_bucket: int = 4,
-                          keep_versions: int = 2) -> dict:
-    """One maintenance decision for a versioned LSH band index:
-    census the live layout's bucket files, compact into a fresh
-    layout iff :func:`compact_is_due`, publish, prune.  Returns the
-    report row (REPORT_SCHEMA keys); ``acted=False`` sweeps cost one
-    directory glob and nothing else."""
-    live = _require_versioned(index_root, "LSH")
-    before = publish.current_version(index_root)
-    mx, _n, total = bucket_file_census(live)
-    due = compact_is_due(mx, max_files_per_bucket)
+def _rewrite_and_publish(pub, write, keep_versions: int) -> None:
+    """Write a fresh layout (``write(path)``), publish it, prune."""
+    out = pub.new_layout_dir()
+    write(pub.data_path(out))
+    pub.publish(out)
+    pub.prune(keep=keep_versions)
+
+
+def _report(pub, kind: str, due: bool, before: int, **detail) -> dict:
+    return {"index_root": pub.data_path(pub.root), "kind": kind,
+            "due": due, "acted": due, "version_before": before,
+            "version_after": pub.current_version(), **detail}
+
+
+class SweepKind(NamedTuple):
+    """One index family's row of :data:`SWEEP_KINDS`."""
+    # (spark, pub, layout_key) -> (max, nonempty, total)
+    census: Callable
+    # (census, threshold, n_cells) -> bool
+    is_due: Callable
+    # (spark, live_path, out_path, n_cells, sample_cap) -> None
+    rewrite: Callable
+    # census index reported as files_before / files_after
+    report_field: int
+
+
+def _bucket_kind(compact) -> SweepKind:
+    """A bucket-partitioned family's row: paged key census,
+    :func:`compact_is_due`, ``compact`` as the rewrite; reports
+    total files."""
+    return SweepKind(
+        census=lambda spark, pub, key: store_bucket_census(pub.store,
+                                                           key),
+        is_due=lambda c, threshold, n_cells: compact_is_due(c[0],
+                                                           threshold),
+        rewrite=lambda spark, live, out, n_cells, sample_cap: compact(
+            spark, [live], out),
+        report_field=2)
+
+
+def _ivf_recluster(spark, live: str, out: str, n_cells: int,
+                   sample_cap: int) -> None:
+    # the centroids go INTO the fresh layout, so one pointer swap
+    # versions quantizer and cells together (the x133 invariant)
+    ivf_centroids_write(out, ivf_index_recluster(spark, live, out,
+                                                 n_cells, sample_cap))
+
+
+SWEEP_KINDS = {
+    "lsh": _bucket_kind(lsh_index_compact),
+    "postings": _bucket_kind(postings_index_compact),
+    "ivf": SweepKind(
+        census=lambda spark, pub, key: ivf_cell_census(
+            spark, pub.data_path(key)),
+        is_due=lambda c, threshold, n_cells: recluster_is_due(
+            c[0], n_cells, c[2], threshold),
+        rewrite=_ivf_recluster,
+        report_field=0),
+}
+
+
+def compaction_sweep(spark, pub, kind: str, threshold: int = 4,
+                     n_cells: int = 16, sample_cap: int = 4096,
+                     keep_versions: int = 2) -> dict:
+    """One maintenance decision for the versioned index root behind
+    ``pub`` (a ``publish.StorePublisher``): census the live layout,
+    rewrite into a fresh layout iff the kind's due-predicate fires,
+    publish, prune.  Returns the report row (REPORT_SCHEMA keys);
+    ``acted=False`` sweeps cost one census and nothing else.
+
+    ``kind`` picks the :data:`SWEEP_KINDS` row:
+
+    - ``lsh`` / ``postings``: paged ``bucket=N`` key census;
+      compaction is due when the hottest bucket holds >=
+      ``threshold`` files (:func:`compact_is_due`); the rewrite is
+      the family's compaction; ``files_*`` report total files.
+    - ``ivf``: one cell-keyed aggregate; re-centroiding is due when
+      the fullest of ``n_cells`` cells holds >= ``threshold`` times
+      the mean cell size (``recluster_is_due`` — drifted appends
+      crowding stale cells, the x133 trigger); the rewrite
+      re-clusters and stamps the centroids into the fresh layout;
+      ``files_*`` report the max-cell row count (the skew measure
+      the predicate acts on)."""
+    k = SWEEP_KINDS[kind]
+    live, before = _live(pub, kind)
+    c0 = k.census(spark, pub, live)
+    due = k.is_due(c0, threshold, n_cells)
     if due:
-        out = publish.new_layout_dir(index_root)
-        lsh_index_compact(spark, [live], out)
-        publish.publish(index_root, out)
-        publish.prune(index_root, keep=keep_versions)
-    after_dir = publish.resolve(index_root)
-    mx2, _n2, total2 = bucket_file_census(after_dir)
-    return {"index_root": index_root, "kind": "lsh", "due": due,
-            "acted": due, "version_before": before,
-            "version_after": publish.current_version(index_root),
-            "files_before": total, "files_after": total2}
-
-
-def postings_maintenance_sweep(spark, index_root: str,
-                               max_files_per_bucket: int = 4,
-                               keep_versions: int = 2) -> dict:
-    """:func:`lsh_maintenance_sweep` for the x117/x121/x123 postings
-    index — same census, same due-predicate, x123's compaction as
-    the rewrite."""
-    live = _require_versioned(index_root, "postings")
-    before = publish.current_version(index_root)
-    mx, _n, total = bucket_file_census(live)
-    due = compact_is_due(mx, max_files_per_bucket)
-    if due:
-        out = publish.new_layout_dir(index_root)
-        postings_index_compact(spark, [live], out)
-        publish.publish(index_root, out)
-        publish.prune(index_root, keep=keep_versions)
-    mx2, _n2, total2 = bucket_file_census(publish.resolve(index_root))
-    return {"index_root": index_root, "kind": "postings", "due": due,
-            "acted": due, "version_before": before,
-            "version_after": publish.current_version(index_root),
-            "files_before": total, "files_after": total2}
-
-
-def ivf_maintenance_sweep(spark, index_root: str, n_cells: int = 16,
-                          skew_threshold: int = 4,
-                          sample_cap: int = 4096,
-                          keep_versions: int = 2) -> dict:
-    """One maintenance decision for a versioned IVF ANN index:
-    ``ivf_cell_census`` the live layout (one cell-keyed aggregate),
-    re-centroid into a fresh layout iff ``recluster_is_due``
-    (drifted appends crowding stale cells — the x133 trigger), stamp
-    the new centroids INTO the layout (``ivf_centroids_write``, so
-    the pointer swap versions quantizer and cells together),
-    publish, prune.  ``files_*`` report the max-cell row count here
-    (the skew measure the predicate acts on)."""
-    live = _require_versioned(index_root, "IVF")
-    before = publish.current_version(index_root)
-    mx, n, total = ivf_cell_census(spark, live)
-    due = recluster_is_due(mx, n_cells, total, skew_threshold)
-    if due:
-        out = publish.new_layout_dir(index_root)
-        cmat = ivf_index_recluster(spark, live, out, n_cells,
-                                   sample_cap)
-        ivf_centroids_write(out, cmat)
-        publish.publish(index_root, out)
-        publish.prune(index_root, keep=keep_versions)
-    mx2, _n2, _t2 = ivf_cell_census(spark, publish.resolve(index_root))
-    return {"index_root": index_root, "kind": "ivf", "due": due,
-            "acted": due, "version_before": before,
-            "version_after": publish.current_version(index_root),
-            "files_before": mx, "files_after": mx2}
-
-
-def store_bucket_census(store, layout_key: str) -> tuple[int, int, int]:
-    """:func:`bucket_file_census` over an object-store layout prefix
-    (r12): page the layout's keys (memory bounded by the page size,
-    never the key count) and count ``*.parquet`` objects per
-    ``bucket=N`` key segment.  Same return shape: (max files in one
-    bucket, nonempty buckets, total files)."""
-    counts: dict[str, int] = {}
-    prefix = layout_key.rstrip("/") + "/"
-    for page in store.list_pages(prefix):
-        for key in page:
-            if not key.endswith(".parquet"):
-                continue
-            rest = key[len(prefix):]
-            seg = rest.split("/", 1)[0]
-            if seg.startswith("bucket="):
-                counts[seg] = counts.get(seg, 0) + 1
-    if not counts:
-        return 0, 0, 0
-    return max(counts.values()), len(counts), sum(counts.values())
-
-
-def lsh_maintenance_sweep_store(spark, store, root: str,
-                                cas: bool = False,
-                                max_files_per_bucket: int = 4,
-                                keep_versions: int = 2,
-                                spark_uri=None) -> dict:
-    """:func:`lsh_maintenance_sweep` over an object-store bucket
-    (r12, completing VERDICT r11 #3: publish went store-native in
-    m13b; this takes the census -> due? -> rewrite -> publish loop
-    with it, so index upkeep runs where a 100 TB index actually
-    lives).  Control plane = the 5-verb client via
-    :class:`publish.StorePublisher`; census = one paged listing;
-    data plane = Spark parquet against ``spark_uri(key)`` — the
-    file-backed double's ``fs_path`` by default, a
-    ``lambda k: f"s3a://{bucket}/{k}"`` on a real deployment."""
-    from . import publish as _pub
-
-    pub = _pub.StorePublisher(store, root, cas=cas)
-    if pub.current_version() is None:
-        raise ValueError(
-            f"LSH store sweep needs a VERSIONED index root (no "
-            f"{_pub.POINTER} object under {root!r}): build into "
-            f"pub.new_layout_dir(), then pub.publish() it")
-    if spark_uri is None:
-        spark_uri = store.fs_path      # the sandbox double's plane
-    live = pub.resolve()
-    before = pub.current_version()
-    mx, _n, total = store_bucket_census(store, live)
-    due = compact_is_due(mx, max_files_per_bucket)
-    if due:
-        out = pub.new_layout_dir()
-        lsh_index_compact(spark, [spark_uri(live)], spark_uri(out))
-        pub.publish(out)
-        pub.prune(keep=keep_versions)
-    mx2, _n2, total2 = store_bucket_census(store, pub.resolve())
-    return {"index_root": root, "kind": "lsh", "due": due,
-            "acted": due, "version_before": before,
-            "version_after": pub.current_version(),
-            "files_before": total, "files_after": total2}
-
-
-def postings_maintenance_sweep_store(spark, store, root: str,
-                                     cas: bool = False,
-                                     max_files_per_bucket: int = 4,
-                                     keep_versions: int = 2,
-                                     spark_uri=None) -> dict:
-    """:func:`postings_maintenance_sweep` over a bucket — the
-    postings index shares the ``bucket=N`` layout, so the store
-    census is :func:`store_bucket_census` verbatim and the rewrite
-    is x123's compaction against the ``spark_uri`` data plane."""
-    from . import publish as _pub
-
-    pub = _pub.StorePublisher(store, root, cas=cas)
-    if pub.current_version() is None:
-        raise ValueError(
-            f"postings store sweep needs a VERSIONED index root (no "
-            f"{_pub.POINTER} object under {root!r})")
-    if spark_uri is None:
-        spark_uri = store.fs_path
-    live = pub.resolve()
-    before = pub.current_version()
-    mx, _n, total = store_bucket_census(store, live)
-    due = compact_is_due(mx, max_files_per_bucket)
-    if due:
-        out = pub.new_layout_dir()
-        postings_index_compact(spark, [spark_uri(live)],
-                               spark_uri(out))
-        pub.publish(out)
-        pub.prune(keep=keep_versions)
-    mx2, _n2, total2 = store_bucket_census(store, pub.resolve())
-    return {"index_root": root, "kind": "postings", "due": due,
-            "acted": due, "version_before": before,
-            "version_after": pub.current_version(),
-            "files_before": total, "files_after": total2}
-
-
-def ivf_maintenance_sweep_store(spark, store, root: str,
-                                cas: bool = False,
-                                n_cells: int = 16,
-                                skew_threshold: int = 4,
-                                sample_cap: int = 4096,
-                                keep_versions: int = 2,
-                                spark_uri=None) -> dict:
-    """:func:`ivf_maintenance_sweep` over a bucket — the IVF census
-    is already a Spark aggregate over the layout parquet, so only
-    the control plane changes: resolve/name/publish/prune through
-    :class:`publish.StorePublisher`, parquet I/O through
-    ``spark_uri``.  The recluster stamps the new centroids INTO the
-    fresh layout before the publish, so the one-PUT swap versions
-    quantizer and cells together (the x133 invariant, unchanged)."""
-    from . import publish as _pub
-
-    pub = _pub.StorePublisher(store, root, cas=cas)
-    if pub.current_version() is None:
-        raise ValueError(
-            f"IVF store sweep needs a VERSIONED index root (no "
-            f"{_pub.POINTER} object under {root!r})")
-    if spark_uri is None:
-        spark_uri = store.fs_path
-    live = pub.resolve()
-    before = pub.current_version()
-    mx, n, total = ivf_cell_census(spark, spark_uri(live))
-    due = recluster_is_due(mx, n_cells, total, skew_threshold)
-    if due:
-        out = pub.new_layout_dir()
-        cmat = ivf_index_recluster(spark, spark_uri(live),
-                                   spark_uri(out), n_cells,
-                                   sample_cap)
-        ivf_centroids_write(spark_uri(out), cmat)
-        pub.publish(out)
-        pub.prune(keep=keep_versions)
-    mx2, _n2, _t2 = ivf_cell_census(spark, spark_uri(pub.resolve()))
-    return {"index_root": root, "kind": "ivf", "due": due,
-            "acted": due, "version_before": before,
-            "version_after": pub.current_version(),
-            "files_before": mx, "files_after": mx2}
+        _rewrite_and_publish(
+            pub, lambda out: k.rewrite(spark, pub.data_path(live), out,
+                                       n_cells, sample_cap),
+            keep_versions)
+    c1 = k.census(spark, pub, pub.resolve())
+    return _report(pub, kind, due, before,
+                   files_before=c0[k.report_field],
+                   files_after=c1[k.report_field])
 
 
 def vocab_retrain_is_due(fresh_x1000: int, trained_x1000: int,
@@ -349,14 +246,14 @@ def nb_retrain_is_due(oov_x1000: int, fresh_prior_x1000: int,
             >= max_prior_drift_x1000)
 
 
-def vocab_maintenance_sweep(spark, root: str, fresh_df,
+def vocab_maintenance_sweep(spark, pub, fresh_df,
                             n_merges: int = 4,
                             max_drift_x1000: int = 150,
                             text_col: str = "text",
                             keep_versions: int = 2) -> dict:
-    """One retrain decision for a published BPE vocabulary — the
-    x134 sweep shape applied to a TRAINED ARTIFACT (r12, VERDICT r11
-    #4): measure fresh-slice fertility under the LIVE merges (one
+    """One retrain decision for the BPE vocabulary published under
+    ``pub`` — the x134 sweep shape applied to a TRAINED ARTIFACT:
+    measure fresh-slice fertility under the LIVE merges (one
     bounded aggregate — the x89 measurement collapsed to an
     integer), compare against the stamped at-training baseline,
     retrain-and-publish iff :func:`vocab_retrain_is_due`.
@@ -373,12 +270,11 @@ def vocab_maintenance_sweep(spark, root: str, fresh_df,
     from . import artifacts
     from .text import bpe_train_merges, encode_fertility_x1000
 
-    _require_versioned(root, "vocab")
-    before = publish.current_version(root)
-    meta = artifacts.bpe_vocab_meta(root)
+    live, before = _live(pub, "vocab")
+    meta = artifacts.bpe_vocab_meta(pub.data_path(live))
     if "fertility_x1000" not in meta:
         raise ValueError(
-            f"the live vocab under {root!r} carries no "
+            f"the live vocab under {pub.root!r} carries no "
             f"fertility_x1000 stamp — retrain drift has no baseline. "
             f"Republish it via bpe_vocab_write(..., fertility_x1000="
             f"encode_fertility_x1000(training_df, merges))")
@@ -392,25 +288,22 @@ def vocab_maintenance_sweep(spark, root: str, fresh_df,
         rules = tuple((l, r, m) for _, l, r, m, _ in m2)
         new_fert = encode_fertility_x1000(fresh_df, rules,
                                           text_col=text_col)
-        out = publish.new_layout_dir(root)
-        artifacts.bpe_vocab_write(m2, out, fertility_x1000=new_fert)
-        publish.publish(root, out)
-        publish.prune(root, keep=keep_versions)
-    return {"index_root": root, "kind": "vocab", "due": due,
-            "acted": due, "version_before": before,
-            "version_after": publish.current_version(root),
-            "fertility_trained_x1000": trained,
-            "fertility_fresh_x1000": fresh}
+        _rewrite_and_publish(
+            pub, lambda out: artifacts.bpe_vocab_write(
+                m2, out, fertility_x1000=new_fert), keep_versions)
+    return _report(pub, "vocab", due, before,
+                   fertility_trained_x1000=trained,
+                   fertility_fresh_x1000=fresh)
 
 
-def nb_maintenance_sweep(spark, root: str, fresh_doc,
+def nb_maintenance_sweep(spark, pub, fresh_doc,
                          pos_col: str = "is_pos",
                          text_col: str = "text",
                          max_oov_x1000: int = 100,
                          max_prior_drift_x1000: int = 250,
                          keep_versions: int = 2) -> dict:
-    """One retrain decision for a published NB quality model (r12,
-    VERDICT r11 #4): census the fresh labeled slice's OOV token mass
+    """One retrain decision for the NB quality model published under
+    ``pub``: census the fresh labeled slice's OOV token mass
     and class prior against the LIVE model (two bounded aggregates),
     and iff :func:`nb_retrain_is_due`, fold the fresh counts into
     the published counts (x128's exact integer merge — reads ONLY
@@ -434,9 +327,8 @@ def nb_maintenance_sweep(spark, root: str, fresh_doc,
     from . import artifacts
     from .text import tokenize
 
-    _require_versioned(root, "nb")
-    before = publish.current_version(root)
-    cnt, np_, nn = artifacts.nb_model_read(spark, root)
+    live, before = _live(pub, "nb")
+    cnt, np_, nn = artifacts.nb_model_read(spark, pub.data_path(live))
 
     toks = fresh_doc.select(
         F.col(pos_col).alias("is_pos"),
@@ -491,35 +383,31 @@ def nb_maintenance_sweep(spark, root: str, fresh_doc,
                           (F.coalesce("nc_b", F.lit(0))
                            + F.coalesce("nc_d", F.lit(0)))
                           .alias("nc")))
-        out = publish.new_layout_dir(root)
-        artifacts.nb_model_write(merged, np_ + np_f, nn + nn_f, out)
-        publish.publish(root, out)
-        publish.prune(root, keep=keep_versions)
-    return {"index_root": root, "kind": "nb", "due": due,
-            "acted": due, "version_before": before,
-            "version_after": publish.current_version(root),
-            "oov_x1000": oov_x1000,
-            "fresh_prior_x1000": fresh_prior_x1000,
-            "model_prior_x1000": model_prior_x1000}
+        _rewrite_and_publish(
+            pub, lambda out: artifacts.nb_model_write(
+                merged, np_ + np_f, nn + nn_f, out), keep_versions)
+    return _report(pub, "nb", due, before, oov_x1000=oov_x1000,
+                   fresh_prior_x1000=fresh_prior_x1000,
+                   model_prior_x1000=model_prior_x1000)
 
 
 def maintenance_daemon(sweeps, poll_seconds: float = 5.0):
     """The continuously-running form (the ``watch_daemon`` analog):
-    run every thunk in ``sweeps`` (zero-arg callables returning a
-    report row, e.g. ``lambda: ivf_maintenance_sweep(spark, root)``)
-    once per ``poll_seconds`` tick on a background thread.  Returns a
-    handle whose ``stop()`` finishes the in-flight tick and joins
-    (graceful SIGINT wiring is the caller's, exactly as
-    ``__main__.cmd_watch`` does for the file watcher); ``reports``
-    accumulates every sweep's report row for inspection.  Sweep
-    exceptions stop the daemon and re-raise on ``stop()`` — a
-    maintenance loop that silently skips failed sweeps would let an
-    index decay unboundedly while looking healthy."""
+    run every thunk in ``sweeps`` (zero-arg callables, e.g.
+    ``lambda: compaction_sweep(spark, pub, "ivf")``) once per
+    ``poll_seconds`` tick on a background thread.  The daemon keeps
+    no per-tick state: a thunk that wants its report row handles it
+    itself (the CLI prints it, tests collect it).  Returns a handle
+    whose ``stop()`` finishes the in-flight tick and joins (graceful
+    SIGINT wiring is the caller's, exactly as ``__main__.cmd_watch``
+    does for the file watcher).  Sweep exceptions stop the daemon
+    and re-raise on ``stop()`` — a maintenance loop that silently
+    skips failed sweeps would let an index decay unboundedly while
+    looking healthy."""
     import threading
 
     class _Daemon:
         def __init__(self):
-            self.reports: list[dict] = []
             self._stop = threading.Event()
             self._error: BaseException | None = None
             self._thread = threading.Thread(target=self._run,
@@ -530,7 +418,7 @@ def maintenance_daemon(sweeps, poll_seconds: float = 5.0):
             while not self._stop.is_set():
                 for sweep in sweeps:
                     try:
-                        self.reports.append(sweep())
+                        sweep()
                     except BaseException as exc:  # surface on stop()
                         self._error = exc
                         return

@@ -1,53 +1,61 @@
-"""Atomic versioned-pointer PUBLISH for persisted index layouts
-(r11, VERDICT r10 #2).
+"""Atomic versioned-pointer PUBLISH for persisted index layouts.
 
-Three maintenance passes rewrite an index into a fresh directory —
-LSH band compaction (``dedup.lsh_index_compact``), postings
-compaction (``text.postings_index_compact``), IVF re-centroiding
-(``similarity.ivf_index_recluster``) — and each docstring promised
-"probes keep serving the old layout until the atomic directory
-swap".  This module makes the swap executable, once, for all three:
+Three maintenance passes rewrite an index into a fresh layout — LSH
+band compaction (``dedup.lsh_index_compact``), postings compaction
+(``text.postings_index_compact``), IVF re-centroiding
+(``similarity.ivf_index_recluster``) — and the trained artifacts of
+``operators.artifacts`` are retrained the same way.  Probes keep
+serving the old layout until an atomic pointer swap; this module is
+that swap, once, for all of them.
 
-- An index ROOT is a directory holding one or more LAYOUT
-  subdirectories plus a pointer file ``_current.json`` naming the
-  live one.  The pointer is the ONLY mutable object; layouts are
-  immutable once published.
-- ``publish(root, layout)`` atomically repoints (POSIX temp +
-  ``os.replace`` — the same all-or-nothing visibility discipline as
-  ``LocalObjectStoreClient.put``; on S3 the pointer is one PUT,
-  which is atomic by contract).  Versions are monotone.
-- ``resolve(root)`` returns the live layout directory.  A root with
-  NO pointer resolves to itself, so every pre-r11 unversioned index
-  keeps working and probes can take either form.
+One lifecycle, one class: :class:`StorePublisher` runs it over the
+5-verb ``ObjectStoreClient`` contract (``pipeline/manifest.py``),
+whose only storage guarantee is the object store's atomic PUT — the
+same guarantee the reference's one-PUT result upload rests on
+(GetJobs.py:57-60).  :func:`open_root` is the single way to open an
+index root; every spelling gives a publisher:
 
-Crash contract: a maintenance pass that dies AFTER writing the new
-layout but BEFORE ``publish`` leaves the pointer — and therefore
-every reader — on the old version; the orphaned layout directory is
-invisible (never resolved, never reused for a new version name) and
-a re-run simply writes a fresh one.  A reader that resolved the
-pointer immediately before a publish keeps reading the OLD layout
-directory, which the publish never touches — readers always see one
-consistent version end-to-end (fuzzed in tests/test_differential.py).
+- a plain path ``/data/idx`` and ``mock:///data/idx`` both open the
+  file-backed ``LocalObjectStoreClient`` rooted at the PARENT
+  directory, with the last path component as the root key;
+- ``s3://bucket/prefix`` opens the boto3 ``S3ObjectStoreClient``.
 
-Scale (100 TB): the pointer is O(history) bytes of metadata; the
-swap cost is independent of index size.  Old layouts are retired
-explicitly via :func:`prune` (keep >= 2 so probes that resolved just
-before a publish finish their scan before their layout is deleted —
-the vacuum-horizon discipline of m10).
+The store's ``fs_path`` maps a key to where Spark reads it (the
+backing file locally, ``s3a://bucket/key`` on S3) — the data plane;
+the publisher owns only the control plane: naming, pointing,
+retiring.
 
-Two data planes, one contract (r12, VERDICT r11 #3):
+- An index ROOT is a key prefix holding LAYOUT prefixes plus ONE
+  pointer object ``<root>/_current.json`` = ``{version, dir,
+  history}`` naming the live layout.  The pointer is the only
+  mutable object; layouts are immutable once published.
+- ``publish`` is one pointer PUT, so a reader sees the old pointer
+  or the new one, never a torn one.  Versions are monotone.
+- ``resolve`` names the live layout.  A root with NO pointer
+  resolves to itself, so an unversioned index keeps working and
+  probes take either form.
 
-- the module-level functions operate on POSIX roots (temp +
-  ``os.replace`` pointer swap);
-- :class:`StorePublisher` operates the SAME lifecycle over an
-  ``ObjectStoreClient`` bucket — the reference's actual deployment
-  surface (``README.md:114`` input/output prefixes; ``role.json``
-  grants S3 object verbs).  The pointer becomes ONE PUT, atomic by
-  the same contract the P8 direct-PUT commit leans on; a "layout
-  directory" becomes a key PREFIX; prune becomes a paged list +
-  deletes.  Readers keep the identical guarantee: resolve returns
-  one consistent version, and a publish never touches the keys a
-  just-resolved reader is scanning.
+Store semantics, the same on every root:
+
+- a layout EXISTS when it holds at least one object.  An empty
+  directory is not a layout, and its name may be reused; a writer
+  that crashed after its first object leaves a partial layout whose
+  name is never reused;
+- retiring a layout deletes its objects.  On a local root the empty
+  directory skeleton may remain.
+
+Crash contract: a pass that dies AFTER writing the new layout but
+BEFORE ``publish`` leaves the pointer — and so every reader — on
+the old version; a re-run writes a fresh layout.  A reader that
+resolved the pointer just before a publish keeps reading the OLD
+layout, which the publish never touches (fuzzed in
+tests/test_differential.py).  ``prune`` (keep >= 2) retires old
+layouts only once no in-flight probe can still be scanning them —
+the vacuum-horizon discipline of m10.
+
+Scale (100 TB): the pointer is O(history) bytes; the swap cost is
+independent of index size; prune memory is bounded by the list page
+size, never by layout key count.
 """
 
 from __future__ import annotations
@@ -60,155 +68,60 @@ if TYPE_CHECKING:  # import cycle: manifest imports nothing from here
     from ..pipeline.manifest import ObjectStoreClient
 
 POINTER = "_current.json"
+# the schemes an index root may be spelled in (:func:`open_root`)
+ROOT_SCHEMES = ("", "mock", "s3")
 
 
-def _pointer_path(index_root: str) -> str:
-    return os.path.join(index_root, POINTER)
+def open_root(location: str, cas: bool = False) -> "StorePublisher":
+    """The publisher for an index-root location: a plain path,
+    ``mock:///abs/path`` (both the file-backed client rooted at the
+    parent directory, the last component as the root key) or
+    ``s3://bucket/prefix``.  ``cas`` elects the multi-maintainer
+    pointer mode (:class:`StorePublisher`)."""
+    from ..pipeline.manifest import (LocalObjectStoreClient,
+                                     S3ObjectStoreClient, _split_scheme)
+    scheme, rest = _split_scheme(location)
+    if scheme == "s3":
+        bucket, _, root = rest.partition("/")
+        if not bucket or not root.strip("/"):
+            raise ValueError(
+                f"s3 uri {location!r}: expected s3://bucket/prefix")
+        return StorePublisher(S3ObjectStoreClient(bucket), root, cas=cas)
+    if scheme not in ROOT_SCHEMES:
+        raise ValueError(f"unsupported index-root scheme {scheme!r} "
+                         f"(supported: plain path, mock://, s3://)")
+    path = rest if scheme == "" else "/" + rest.lstrip("/")
+    parent, key = os.path.split(path.rstrip("/"))
+    if not key:
+        raise ValueError(f"index root {location!r} names no directory")
+    if scheme == "mock" and not os.path.isdir(parent):
+        raise ValueError(f"mock uri {location!r}: parent directory "
+                         f"{parent!r} must exist (the bucket double)")
+    return StorePublisher(LocalObjectStoreClient(parent or os.curdir),
+                          key, cas=cas)
 
 
-def _read_pointer(index_root: str) -> dict | None:
-    path = _pointer_path(index_root)
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        return json.load(f)
-
-
-def current_version(index_root: str) -> int | None:
-    """Version number the pointer currently names, or None for an
-    unversioned root (no pointer file)."""
-    meta = _read_pointer(index_root)
-    return None if meta is None else int(meta["version"])
-
-
-def resolve(index_root: str) -> str:
-    """The live layout directory for ``index_root``.
-
-    With a pointer: ``index_root/<dir>`` for the published version.
-    Without one: ``index_root`` itself — an unversioned index IS its
-    own layout, so every reader can resolve unconditionally and
-    pre-pointer indexes keep serving unchanged."""
-    meta = _read_pointer(index_root)
-    if meta is None:
-        return index_root
-    return os.path.join(index_root, meta["dir"])
-
-
-def new_layout_dir(index_root: str, prefix: str = "layout-v") -> str:
-    """A FRESH layout directory path for a writer (not created, not
-    published): ``<root>/<prefix><n>`` for the smallest n greater
-    than both the published version and every name already on disk —
-    a crashed writer's orphan directory is never reused, so a
-    half-written layout can never be mistaken for a complete one."""
-    meta = _read_pointer(index_root)
-    n = 0 if meta is None else int(meta["version"])
-    while True:
-        n += 1
-        cand = os.path.join(index_root, f"{prefix}{n:05d}")
-        if not os.path.exists(cand):
-            return cand
-
-
-def publish(index_root: str, layout_dir: str) -> int:
-    """Atomically repoint ``index_root`` at ``layout_dir``; returns
-    the new version number.
-
-    ``layout_dir`` must be an existing DIRECT subdirectory of
-    ``index_root`` (the pointer stores the relative name, so the
-    root relocates as one unit) and must not be the currently-live
-    layout (republishing the live dir is a no-op bug upstream, and
-    pruning history could then delete the live layout).  The pointer
-    write is temp + ``os.replace``: a reader sees the old pointer or
-    the new one, never a torn file."""
-    root_real = os.path.realpath(index_root)
-    layout_real = os.path.realpath(layout_dir)
-    if os.path.dirname(layout_real) != root_real:
-        raise ValueError(
-            f"layout {layout_dir!r} is not a direct subdirectory of "
-            f"index root {index_root!r} — layouts live inside their "
-            f"root so the pointer's relative name stays valid")
-    if not os.path.isdir(layout_real):
-        raise ValueError(f"layout {layout_dir!r} does not exist — "
-                         f"write the layout fully, then publish")
-    rel = os.path.basename(layout_real)
-    if rel == POINTER:
-        raise ValueError(f"{POINTER} is the pointer, not a layout")
-    meta = _read_pointer(index_root)
-    if meta is not None and meta["dir"] == rel:
-        raise ValueError(
-            f"layout {rel!r} is already the live version "
-            f"{meta['version']} — a maintenance pass publishes a "
-            f"FRESH directory, never re-publishes the live one")
-    version = 1 if meta is None else int(meta["version"]) + 1
-    history = ([] if meta is None else meta.get("history", [])) + [
-        {"version": version, "dir": rel}]
-    new_meta = {"version": version, "dir": rel, "history": history}
-    tmp = _pointer_path(index_root) + ".inprogress"
-    with open(tmp, "w") as f:
-        json.dump(new_meta, f)
-    os.replace(tmp, _pointer_path(index_root))
-    return version
-
-
-def prune(index_root: str, keep: int = 2) -> list[str]:
-    """Delete layout directories of versions older than the newest
-    ``keep`` published ones; returns the deleted directory paths.
-    ``keep >= 2`` is the safe floor for concurrent readers: a probe
-    that resolved the pointer just before a publish is still scanning
-    version N-1 while N is live (the m10 vacuum-horizon argument).
-    Orphaned never-published directories are NOT touched — they may
-    be a maintenance pass mid-write."""
-    if keep < 1:
-        raise ValueError(f"keep must be >= 1, got {keep}")
-    meta = _read_pointer(index_root)
-    if meta is None:
-        return []
-    import shutil
-    history = meta.get("history", [])
-    retire, remain = history[:-keep], history[-keep:]
-    live = meta["dir"]
-    deleted = []
-    for h in retire:
-        if h["dir"] == live or h["dir"] in {r["dir"] for r in remain}:
-            continue
-        path = os.path.join(index_root, h["dir"])
-        if os.path.isdir(path):
-            shutil.rmtree(path)
-            deleted.append(path)
-    new_meta = dict(meta, history=remain)
-    tmp = _pointer_path(index_root) + ".inprogress"
-    with open(tmp, "w") as f:
-        json.dump(new_meta, f)
-    os.replace(tmp, _pointer_path(index_root))
-    return deleted
+def resolve(location: str) -> str:
+    """The live layout's data-plane path for an index-root location
+    (:func:`open_root`); the root itself when it is unversioned.  A
+    location in any other scheme (``s3a://``, ``file://``,
+    ``hdfs://`` — e.g. a path an earlier ``resolve`` returned) is an
+    unversioned data-plane path and comes back unchanged."""
+    from ..pipeline.manifest import _split_scheme
+    if _split_scheme(location)[0] not in ROOT_SCHEMES:
+        return location
+    pub = open_root(location)
+    return pub.data_path(pub.resolve())
 
 
 class StorePublisher:
-    """The versioned-pointer lifecycle over an object-store bucket.
-
-    Same contract as the module-level POSIX functions, re-expressed
-    in the 5-verb ``ObjectStoreClient`` vocabulary (the p20/p21
-    quarantine discipline, ``pipeline/manifest.py``):
-
-    - ``root`` is a KEY PREFIX (e.g. ``indexes/lsh``); a layout is
-      the prefix ``<root>/<name>`` and "exists" iff at least one
-      object lives under ``<name>/`` — a flat key namespace has no
-      empty directories, so a writer that crashed before its first
-      object left nothing to confuse (the POSIX orphan-dir check
-      degenerates away).
-    - the pointer ``<root>/_current.json`` is ONE object; publish is
-      ONE ``put`` — atomic by the S3 PUT contract, so no temp +
-      rename dance is needed (publish.py module docstring argued
-      this since r11; this class executes it).
-    - ``prune`` pages over each retired layout prefix
-      (``list_pages`` — driver memory bounded by page size, never by
-      layout key count) and deletes; DELETE is idempotent, so a
-      crashed prune re-run converges.
-
-    Physical layout DATA still moves through Spark (parquet over the
-    scheme's Hadoop connector in a real deployment; the file-backed
-    double's ``fs_path`` in this sandbox) — this class owns only the
-    control plane: naming, pointing, retiring.
+    """The versioned-pointer lifecycle over one index root of an
+    object store (module docstring): ``root`` is a KEY PREFIX (e.g.
+    ``indexes/lsh``), a layout is the prefix ``<root>/<name>``, the
+    pointer ``<root>/_current.json`` is ONE object written by ONE
+    ``put``, and ``prune`` pages over each retired layout prefix
+    (``list_pages``) and deletes — DELETE is idempotent, so a crashed
+    prune re-run converges.  Build one with :func:`open_root`.
 
     CONCURRENCY, two modes (ADVICE r12):
 
@@ -292,6 +205,10 @@ class StorePublisher:
             f"{self._pointer_key()} — raise cas_retries or reduce "
             f"maintainer concurrency") from last
 
+    def data_path(self, key: str) -> str:
+        """Where Spark reads ``key``: the store's data plane."""
+        return self.store.fs_path(key)
+
     def _layout_objects(self, name: str) -> bool:
         # point-prefix lookup: first page only — membership needs one
         # object, never the full listing
@@ -305,8 +222,8 @@ class StorePublisher:
         return None if meta is None else int(meta["version"])
 
     def resolve(self) -> str:
-        """Live layout prefix; the root itself when unversioned —
-        the same reader-unconditional contract as :func:`resolve`."""
+        """Live layout key; the root itself when unversioned, so
+        readers resolve unconditionally."""
         meta = self._read_pointer()
         if meta is None:
             return self.root
@@ -327,9 +244,11 @@ class StorePublisher:
     def publish(self, layout_key: str) -> int:
         """Atomically repoint the root at ``layout_key`` (one PUT —
         conditional in cas mode, retried until it wins); returns the
-        new version.  Same preconditions as the POSIX
-        :func:`publish`: a direct child of the root, fully written
-        (>= 1 object), and not the currently-live layout."""
+        new version.  ``layout_key`` must be a direct child of the
+        root (the pointer stores the relative name, so the root
+        relocates as one unit), fully written (>= 1 object), and not
+        the live layout (republishing it is a bug upstream, and
+        pruning history could then delete the live layout)."""
         key = layout_key.rstrip("/")
         head, _, rel = key.rpartition("/")
         if head != self.root or not rel:

@@ -612,7 +612,7 @@ def ivf_index_recluster(spark, index_dir: str, out_dir: str,
     layout; returns the new centroid matrix for the caller to
     publish alongside the swapped index (or persisted into the new
     layout via ``ivf_centroids_write`` so one pointer swap covers
-    both — see ``maintenance.ivf_maintenance_sweep``).
+    both — see ``maintenance.compaction_sweep``).
 
     Identity contract: the index stores exactly the (vec_id,
     embedding) relation the builds wrote, so reclustering a layered
@@ -622,8 +622,7 @@ def ivf_index_recluster(spark, index_dir: str, out_dir: str,
     one corpus-sized Arrow assignment pass + one cell-partitioned
     write, amortized over the recluster cadence (the ANN analog of
     l17/x123 compaction); probes keep serving the old layout until
-    the atomic pointer swap (``publish.publish`` — r11, executable
-    form of the swap this docstring used to leave to the caller)."""
+    the atomic pointer swap (``publish.StorePublisher.publish``)."""
     index_dir = _resolve_layout(index_dir)
     emb = spark.read.parquet(index_dir).select("vec_id", "embedding")
     cmat = ivf_centroids(emb, n_cells, "kmeans", sample_cap)
@@ -637,8 +636,9 @@ def ivf_centroids_write(index_dir: str, cmat) -> None:
     data it quantizes (r11): a ``_``-prefixed sidecar Spark's parquet
     reader ignores, the ``_lsh_meta.json`` discipline applied to the
     IVF index.  With centroids inside the layout directory, one
-    pointer swap (``publish.publish``) versions index AND quantizer
-    together — a probe can never pair new cells with stale centroids.
+    pointer swap (``StorePublisher.publish``) versions index AND
+    quantizer together — a probe can never pair new cells with stale
+    centroids.
     JSON float serialization is repr-exact, so read(write(cmat)) is
     bit-identical (test-pinned)."""
     import json
@@ -711,7 +711,7 @@ def ivf_index_probe(spark, index_dir: str, cmat, emb: DataFrame,
     candidates — identical output contract to :func:`ivf_topk`.
 
     ``index_dir`` may be a plain layout directory or a VERSIONED
-    index root (``publish.publish``); the pointer is resolved once
+    index root (``publish.open_root``); the pointer is resolved once
     up front so the probe reads a single consistent version."""
     index_dir = _resolve_layout(index_dir)
     # The probed-cell list is already known driver-side in the numpy

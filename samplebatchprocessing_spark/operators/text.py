@@ -984,7 +984,7 @@ def postings_probe_and(spark, index_dir: str, terms: list[str],
     groupBy on doc_id over only the query terms' postings.
 
     ``index_dir`` may be a plain layout directory or a VERSIONED
-    index root (``publish.publish``); the pointer is resolved once
+    index root (``publish.open_root``); the pointer is resolved once
     up front so the probe reads a single consistent version."""
     index_dir = _resolve_layout(index_dir)
     return postings_probe_and_df(spark.read.parquet(index_dir),

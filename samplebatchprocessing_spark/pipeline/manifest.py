@@ -279,8 +279,9 @@ class LocalObjectStoreClient(ObjectStoreClient):
     the POSIX temp + ``os.replace`` dance (modeling S3's
     all-or-nothing PUT).  Picklable by construction (state = the
     root string), so it ships through task closures like any real
-    client; doubles as the sandbox stand-in for the ``mock://``
-    scheme in tests and the p21 registry row."""
+    client; the stand-in for the ``mock://`` scheme in tests and the
+    p21 registry row, and the backend of every local index root
+    (``operators.publish.open_root``)."""
 
     def __init__(self, root: str) -> None:
         self.root = root
@@ -307,12 +308,11 @@ class LocalObjectStoreClient(ObjectStoreClient):
             return f.read()
 
     def fs_path(self, key: str) -> str:
-        """The POSIX path backing ``key`` — the DOUBLE's data plane.
-        Spark cannot read a ``mock://`` URI, so layout parquet I/O in
-        tests/registry rows goes straight at the backing file while
+        """The POSIX path backing ``key`` — this client's data plane.
+        Layout parquet I/O goes straight at the backing file while
         the control plane (pointer, listing, prune) exercises the
-        store verbs.  A real deployment has no analog: Spark reads
-        ``s3a://bucket/key`` and the client wraps the same bucket."""
+        store verbs; :meth:`S3ObjectStoreClient.fs_path` is the
+        bucket's counterpart."""
         return self._p(key)
 
     def copy(self, src: str, dst: str) -> None:
@@ -334,11 +334,16 @@ class LocalObjectStoreClient(ObjectStoreClient):
 
     def list(self, prefix: str) -> list[str]:
         # S3 ListObjectsV2 matches by STRING prefix over the flat key
-        # namespace — 'b/inp' matches 'b/input/x' (ADVICE r10), so
-        # walk the whole root and filter, never treat the prefix as a
-        # directory
+        # namespace — 'b/inp' matches 'b/input/x' (ADVICE r10), so the
+        # prefix's last component is a string filter, never a
+        # directory.  The walk starts at the deepest directory the
+        # prefix names in full, so a listing is priced by that
+        # subtree, not by the whole root.
+        top = os.path.join(self.root, os.path.dirname(prefix))
+        if not os.path.isdir(top):
+            return []
         out = []
-        for dirpath, _dirs, files in os.walk(self.root):
+        for dirpath, _dirs, files in os.walk(top):
             for name in files:
                 if self._TMP_RE.search(name):  # crashed put: invisible
                     continue
@@ -367,7 +372,7 @@ class LocalObjectStoreClient(ObjectStoreClient):
     def _lock_path(self, key: str) -> str:
         # keyed by the BACKING OBJECT's realpath, not (root, key):
         # two clients rooted differently over the same tree (the
-        # __main__._store_from_uri re-rooting) — or through a symlink
+        # publish.open_root re-rooting) — or through a symlink
         # alias of it (macOS /tmp -> /private/tmp) — serialize on the
         # same lock file when they target the same object.  The dir is
         # PER-UID and 0700 (a fixed world-shared /tmp name would hand
@@ -555,6 +560,11 @@ class S3ObjectStoreClient(ObjectStoreClient):
                     f"{key}: deleted since read (was {etag})") from e
             raise
         return resp["ETag"].strip('"')
+
+    def fs_path(self, key: str) -> str:
+        """The ``s3a://`` URI Spark reads ``key`` through — the
+        bucket's data plane."""
+        return f"s3a://{self.bucket}/{key}"
 
     def copy(self, src: str, dst: str) -> None:
         self._c().copy_object(

@@ -4319,25 +4319,23 @@ def x134_maintenance_sweep(spark: SparkSession,
     if os.path.exists(root):            # idempotent across runs
         shutil.rmtree(root)
     os.makedirs(root)
-    v1 = publish.new_layout_dir(root)
-    dedup.lsh_index_write(base, v1)
-    publish.publish(root, v1)
+    pub = publish.open_root(root)
+    v1 = pub.new_layout_dir()
+    dedup.lsh_index_write(base, pub.data_path(v1))
+    pub.publish(v1)
 
-    r0 = maintenance.lsh_maintenance_sweep(spark, root,
-                                           max_files_per_bucket=3)
+    r0 = maintenance.compaction_sweep(spark, pub, "lsh", threshold=3)
     for _ in range(3):                  # decay: 3 delta layers
         dedup.lsh_index_append(delta, root)
     before = (dedup.lsh_index_probe(spark, root, batch)
               .localCheckpoint(eager=True))
-    r1 = maintenance.lsh_maintenance_sweep(spark, root,
-                                           max_files_per_bucket=3)
+    r1 = maintenance.compaction_sweep(spark, pub, "lsh", threshold=3)
     after = (dedup.lsh_index_probe(spark, root, batch)
              .localCheckpoint(eager=True))
-    r2 = maintenance.lsh_maintenance_sweep(spark, root,
-                                           max_files_per_bucket=3)
+    r2 = maintenance.compaction_sweep(spark, pub, "lsh", threshold=3)
 
-    mx, n_buckets, total = maintenance.bucket_file_census(
-        publish.resolve(root))
+    mx, n_buckets, total = maintenance.store_bucket_census(
+        pub.store, pub.resolve())
     layout_restored = mx == 1 and total == n_buckets
     from ..exprs import multiset_diff_and_count
     d_pi, n_pi = multiset_diff_and_count(before, after)
@@ -4388,9 +4386,9 @@ def x135_vocab_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``served_parity``: encoding through the published v2 artifact
       == encoding with the trainer's in-memory merge list (the
       artifact round-trip loses nothing);
-    - ``old_layout_alive``: v1's directory survives the v2 publish
-      (the prune read-horizon — an encoder that resolved before the
-      swap finishes its pass on v1).
+    - ``old_layout_alive``: v1's layout keeps its objects after the
+      v2 publish (the prune read-horizon — an encoder that resolved
+      before the swap finishes its pass on v1).
 
     The DuckDB twin re-derives BOTH regimes from scratch with the
     x44 round-unrolled REPLACE chains (v1's chain trains on the
@@ -4419,18 +4417,19 @@ def x135_vocab_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         enc = text.bpe_encode_stats(doc, merges)
         return enc.agg(F.sum("n_pieces")).first()[0]
 
+    pub = publish.open_root(root)
     m1 = text.bpe_train_merges(doc.filter(F.col("doc_id") % 2 == 0),
                                n_merges=4)
-    v1 = publish.new_layout_dir(root)
-    artifacts.bpe_vocab_write(m1, v1)
-    ver1 = publish.publish(root, v1)
+    v1 = pub.new_layout_dir()
+    artifacts.bpe_vocab_write(m1, pub.data_path(v1))
+    ver1 = pub.publish(v1)
     served1 = artifacts.bpe_vocab_read(root)
     tokens_v1 = total_tokens(served1)
 
     m2 = text.bpe_train_merges(doc, n_merges=6)
-    v2 = publish.new_layout_dir(root)
-    artifacts.bpe_vocab_write(m2, v2)
-    ver2 = publish.publish(root, v2)
+    v2 = pub.new_layout_dir()
+    artifacts.bpe_vocab_write(m2, pub.data_path(v2))
+    ver2 = pub.publish(v2)
     served2 = artifacts.bpe_vocab_read(root)
 
     enc_pub = text.bpe_encode_stats(doc, served2)
@@ -4443,7 +4442,8 @@ def x135_vocab_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     return local_df(
         spark,
         [(doc.count(), ver1, ver2, len(served1), len(served2),
-          tokens_v1, tokens_v2, served_parity, os.path.isdir(v1))],
+          tokens_v1, tokens_v2, served_parity,
+          bool(pub.store.list(f"{v1}/")))],
         "n_docs long, version_first int, version_after int, "
         "n_merges_v1 int, n_merges_v2 int, tokens_v1 long, "
         "tokens_v2 long, served_parity boolean, "
@@ -4581,11 +4581,12 @@ def x136_model_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root)
     os.makedirs(root)
 
-    v1 = publish.new_layout_dir(root)
+    pub = publish.open_root(root)
+    v1 = pub.new_layout_dir()
     np_b, nn_b = priors(F.col("doc_id") % 7 != 3)
     artifacts.nb_model_write(counts(~F.col("is_delta")), np_b, nn_b,
-                             v1)
-    ver1 = publish.publish(root, v1)
+                             pub.data_path(v1))
+    ver1 = pub.publish(v1)
 
     cnt_pub, np1, nn1 = artifacts.nb_model_read(spark, root)
     cnt_d = counts(F.col("is_delta"))
@@ -4600,9 +4601,10 @@ def x136_model_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
                        + F.coalesce("pc_d", F.lit(0))).alias("pc"),
                       (F.coalesce("nc_b", F.lit(0))
                        + F.coalesce("nc_d", F.lit(0))).alias("nc")))
-    v2 = publish.new_layout_dir(root)
-    artifacts.nb_model_write(merged, np1 + np_d, nn1 + nn_d, v2)
-    ver2 = publish.publish(root, v2)
+    v2 = pub.new_layout_dir()
+    artifacts.nb_model_write(merged, np1 + np_d, nn1 + nn_d,
+                             pub.data_path(v2))
+    ver2 = pub.publish(v2)
 
     cnt_live, np_live, nn_live = artifacts.nb_model_read(spark, root)
     scores_pub = _nb_score_eval(doc, base.drop("is_delta"), cnt_live,
@@ -4618,7 +4620,8 @@ def x136_model_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
                         priors=(np_live, nn_live))
     lifecycle = local_df(
         spark,
-        [(ver1, ver2, published_parity, os.path.isdir(v1))],
+        [(ver1, ver2, published_parity,
+          bool(pub.store.list(f"{v1}/")))],
         "version_first int, version_after int, "
         "published_parity boolean, old_layout_alive boolean")
     # lifecycle columns lead, mirroring X136_SQL_WRAP's select order
@@ -4684,16 +4687,17 @@ def x137_vocab_retrain_sweep(spark: SparkSession,
     m1 = text.bpe_train_merges(doc, n_merges=4)
     rules1 = tuple((l, r, m) for _, l, r, m, _ in m1)
     f1 = text.encode_fertility_x1000(doc, rules1)
-    v1 = publish.new_layout_dir(root)
-    artifacts.bpe_vocab_write(m1, v1, fertility_x1000=f1)
-    publish.publish(root, v1)
+    pub = publish.open_root(root)
+    v1 = pub.new_layout_dir()
+    artifacts.bpe_vocab_write(m1, pub.data_path(v1), fertility_x1000=f1)
+    pub.publish(v1)
 
-    r0 = maintenance.vocab_maintenance_sweep(spark, root, doc,
+    r0 = maintenance.vocab_maintenance_sweep(spark, pub, doc,
                                              n_merges=4)
     drifted = doc.withColumn("text", F.reverse(F.col("text")))
-    r1 = maintenance.vocab_maintenance_sweep(spark, root, drifted,
+    r1 = maintenance.vocab_maintenance_sweep(spark, pub, drifted,
                                              n_merges=4)
-    r2 = maintenance.vocab_maintenance_sweep(spark, root, drifted,
+    r2 = maintenance.vocab_maintenance_sweep(spark, pub, drifted,
                                              n_merges=4)
     return local_df(
         spark,
@@ -4793,14 +4797,15 @@ def x138_model_retrain_sweep(spark: SparkSession,
     pr = lab.agg(F.sum(F.col("is_pos").cast("long")).alias("np"),
                  F.sum((~F.col("is_pos")).cast("long"))
                  .alias("nn")).first()
-    v1 = publish.new_layout_dir(root)
-    artifacts.nb_model_write(cnt, pr["np"], pr["nn"], v1)
-    publish.publish(root, v1)
+    pub = publish.open_root(root)
+    v1 = pub.new_layout_dir()
+    artifacts.nb_model_write(cnt, pr["np"], pr["nn"], pub.data_path(v1))
+    pub.publish(v1)
 
-    s0 = maintenance.nb_maintenance_sweep(spark, root, lab)
+    s0 = maintenance.nb_maintenance_sweep(spark, pub, lab)
     fresh = lab.withColumn("text", F.reverse(F.col("text")))
-    s1 = maintenance.nb_maintenance_sweep(spark, root, fresh)
-    s2 = maintenance.nb_maintenance_sweep(spark, root, fresh)
+    s1 = maintenance.nb_maintenance_sweep(spark, pub, fresh)
+    s2 = maintenance.nb_maintenance_sweep(spark, pub, fresh)
     return local_df(
         spark,
         [(lab.count(), not s0["due"], bool(s1["acted"]),

@@ -1195,11 +1195,12 @@ def s27_stream_vocab_encode(spark: SparkSession,
         shutil.rmtree(root)
     os.makedirs(root)
 
-    v1 = publish.new_layout_dir(root)
+    pub = publish.open_root(root)
+    v1 = pub.new_layout_dir()
     artifacts.bpe_vocab_write(
         text.bpe_train_merges(doc.filter(F.col("doc_id") % 2 == 0),
-                              n_merges=4), v1)
-    publish.publish(root, v1)
+                              n_merges=4), pub.data_path(v1))
+    pub.publish(v1)
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
 
@@ -1213,7 +1214,7 @@ def s27_stream_vocab_encode(spark: SparkSession,
 
         def encode_batch(df: DataFrame, batch_id: int) -> None:
             merges = artifacts.bpe_vocab_read(root)   # LIVE vocab
-            ver = publish.current_version(root)
+            ver = pub.current_version()
             (text.bpe_encode_stats(df, merges)
              .withColumn("vocab_version", F.lit(ver))
              .write.mode("overwrite")
@@ -1231,10 +1232,10 @@ def s27_stream_vocab_encode(spark: SparkSession,
         F.min("vocab_version").alias("vlo"),
         F.max("vocab_version").alias("vhi")).first()
 
-    v2 = publish.new_layout_dir(root)
+    v2 = pub.new_layout_dir()
     artifacts.bpe_vocab_write(text.bpe_train_merges(doc, n_merges=6),
-                              v2)
-    publish.publish(root, v2)
+                              pub.data_path(v2))
+    pub.publish(v2)
 
     p2 = run_phase(2, 3)
     p2_row = p2.agg(

@@ -141,9 +141,6 @@ _SLOW_TESTS = frozenset({
     "test_publish.py::test_lsh_maintenance_sweep_end_to_end",
     "test_publish.py::test_lsh_probe_through_pointer",
     "test_publish.py::test_probes_stay_consistent_under_live_daemon",
-    "test_publish.py::test_store_ivf_maintenance_sweep_on_planted_drift",
-    "test_publish.py::test_store_lsh_lifecycle_end_to_end",
-    "test_publish.py::test_store_lsh_maintenance_sweep",
     "test_publish.py::test_stream_probe_across_midstream_publish",
     "test_publish.py::test_vocab_sweep_planted_drift_retrains_once",
     "test_streaming.py::test_s25_batch_replay_rewrites_byte_identical",

@@ -1297,8 +1297,6 @@ def test_differential_lsh_probe_under_maintenance(spark, seed,
     is a pure layout change); and a reader that resolved the pointer
     BEFORE the publish keeps reading its old layout consistently
     until the prune horizon passes it."""
-    import os
-
     from samplebatchprocessing_spark.operators import (
         dedup as D2, publish as P)
 
@@ -1319,11 +1317,11 @@ def test_differential_lsh_probe_under_maintenance(spark, seed,
     q_df = spark.createDataFrame(batch, schema)
 
     root = str(tmp_path / "root")
-    v1 = os.path.join(root, "layout-v00001")
-    os.makedirs(root)
-    D2.lsh_index_write(spark.createDataFrame(base, schema), v1,
-                       n_buckets=nb)
-    P.publish(root, v1)
+    pub = P.open_root(root)
+    v1 = pub.new_layout_dir()
+    D2.lsh_index_write(spark.createDataFrame(base, schema),
+                       pub.data_path(v1), n_buckets=nb)
+    pub.publish(v1)
     for delta in deltas:
         D2.lsh_index_append(spark.createDataFrame(delta, schema),
                             root, n_buckets=nb)
@@ -1340,21 +1338,21 @@ def test_differential_lsh_probe_under_maintenance(spark, seed,
 
     # compaction LANDS (fresh dir, unpublished): in-flight probes of
     # the layered form and pointer-routed probes are both unaffected
-    out = P.new_layout_dir(root)
-    D2.lsh_index_compact(spark, [old_layout], out)
+    out = pub.new_layout_dir()
+    D2.lsh_index_compact(spark, [old_layout], pub.data_path(out))
     assert probe(root) == p_layered, f"seed={seed}: pre-publish drift"
     assert probe(old_layout) == p_layered, f"seed={seed}"
 
     # the atomic swap: routed probes move to the compacted layout
     # with identical candidates; the pre-swap reader's layout stays
     # valid until pruned past the keep>=2 horizon
-    P.publish(root, out)
+    pub.publish(out)
     assert probe(root) == p_layered, f"seed={seed}: post-publish drift"
     assert probe(old_layout) == p_layered, f"seed={seed}: old reader"
-    assert P.prune(root, keep=2) == []
+    assert pub.prune(keep=2) == []
     assert probe(old_layout) == p_layered, f"seed={seed}: horizon"
-    assert P.prune(root, keep=1) == [old_layout]
-    assert not os.path.exists(old_layout)
+    assert pub.prune(keep=1) == [v1]
+    assert pub.store.list(f"{v1}/") == [], "retired objects remain"
     assert probe(root) == p_layered, f"seed={seed}: live survives prune"
 
 
@@ -1367,8 +1365,6 @@ def test_differential_ivf_probe_under_maintenance(spark, seed,
     sidecar); after, (new cells, new sidecar); never a mix.  Routed
     probes equal direct probes of the version they resolved, both
     sides of the swap, under random corpora and cell counts."""
-    import os
-
     import numpy as np
 
     from samplebatchprocessing_spark.operators import (
@@ -1385,12 +1381,13 @@ def test_differential_ivf_probe_under_maintenance(spark, seed,
     pred = f"vec_id < {rng.randint(2, 5)}"
 
     root = str(tmp_path / "root")
-    v1 = os.path.join(root, "layout-v00001")
-    os.makedirs(root)
+    pub = P.open_root(root)
+    key1 = pub.new_layout_dir()
+    v1 = pub.data_path(key1)
     cmat1 = S.ivf_index_write(emb.filter(F.col("vec_id") % 3 != 0),
                               v1, n_cells=n_cells)
     S.ivf_centroids_write(v1, cmat1)
-    P.publish(root, v1)
+    pub.publish(key1)
     (S.ivf_assign(emb.filter(F.col("vec_id") % 3 == 0), cmat1)
      .write.mode("append").partitionBy("cell").parquet(P.resolve(root)))
 
@@ -1400,13 +1397,14 @@ def test_differential_ivf_probe_under_maintenance(spark, seed,
                                             pred, k=3).collect()))
 
     # recluster lands unpublished: routed reads stay (v1, cmat1)
-    out = P.new_layout_dir(root)
+    out_key = pub.new_layout_dir()
+    out = pub.data_path(out_key)
     cmat2 = S.ivf_index_recluster(spark, root, out, n_cells=n_cells)
     S.ivf_centroids_write(out, cmat2)
     before = probe(root, S.ivf_centroids_read(root))
     assert before == probe(v1, cmat1), f"seed={seed}: version mix"
 
-    P.publish(root, out)
+    pub.publish(out_key)
     assert (S.ivf_centroids_read(root) == cmat2).all(), \
         f"seed={seed}: sidecar not swapped with cells"
     after = probe(root, S.ivf_centroids_read(root))
@@ -1423,52 +1421,52 @@ def test_differential_publish_lifecycle_invariants(seed, tmp_path):
     published directory; the version is strictly monotone; orphans
     (crashed writers) are never resolved, never name-reused, never
     pruned; prune never deletes the live layout or any of the newest
-    ``keep`` published ones."""
-    import os
+    ``keep`` published ones, and no object remains under a layout
+    it retires."""
     import random as _r
 
     from samplebatchprocessing_spark.operators import publish as P
 
     rng = _r.Random(63_000 + seed)
     root = str(tmp_path / "root")
-    os.makedirs(root)
-    published = []          # dirs in publish order
+    pub = P.open_root(root)
+    published = []          # layout keys in publish order
     orphans = []
     last_version = 0
 
     def check():
-        live = P.resolve(root)
+        live = pub.resolve()
+        assert P.resolve(root) == pub.data_path(live)
         if published:
-            assert live == published[-1] and os.path.isdir(live)
-            assert P.current_version(root) == last_version
+            assert live == published[-1] and pub.store.list(f"{live}/")
+            assert pub.current_version() == last_version
         else:
-            assert live == root
+            assert live == pub.root and P.resolve(root) == root
         for o in orphans:
-            assert os.path.isdir(o), "orphan deleted"
+            assert pub.store.list(f"{o}/"), "orphan deleted"
             assert live != o, "orphan resolved"
 
     for _ in range(rng.randint(5, 20)):
         op = rng.choice(["publish", "crash", "prune"])
-        if op == "publish":
-            d = P.new_layout_dir(root)
+        if op in ("publish", "crash"):
+            d = pub.new_layout_dir()
             assert d not in published and d not in orphans
-            os.makedirs(d)
-            v = P.publish(root, d)
+            pub.store.put(f"{d}/part-0.parquet", op.encode())
+            if op == "crash":       # written, never published
+                orphans.append(d)
+                continue
+            v = pub.publish(d)
             last_version += 1
             assert v == last_version, f"seed={seed}: version skew"
             published.append(d)
-        elif op == "crash":
-            d = P.new_layout_dir(root)
-            assert d not in published and d not in orphans
-            os.makedirs(d)          # written, never published
-            orphans.append(d)
         elif published:
             keep = rng.randint(1, 3)
-            deleted = P.prune(root, keep=keep)
+            deleted = pub.prune(keep=keep)
             keep_set = set(published[-keep:]) | {published[-1]}
             for d in deleted:
                 assert d not in keep_set, f"seed={seed}: horizon"
                 assert d not in orphans
+                assert pub.store.list(f"{d}/") == []
                 published.remove(d)
         check()
 
@@ -1482,7 +1480,6 @@ def test_differential_vocab_artifact_lifecycle(seed, tmp_path):
     in training order (never a crashed writer's, never a pruned
     one's); a reader pinned to a pre-publish layout keeps serving its
     own version byte-for-byte."""
-    import os
     import random as _r
 
     from samplebatchprocessing_spark.operators import artifacts as A
@@ -1490,7 +1487,7 @@ def test_differential_vocab_artifact_lifecycle(seed, tmp_path):
 
     rng = _r.Random(64_000 + seed)
     root = str(tmp_path / "vroot")
-    os.makedirs(root)
+    pub = P.open_root(root)
 
     def fake_merges(version: int):
         n = rng.randint(1, 5)
@@ -1506,10 +1503,10 @@ def test_differential_vocab_artifact_lifecycle(seed, tmp_path):
         if op in ("retrain", "crash"):
             n_written += 1
             m = fake_merges(n_written)
-            d = P.new_layout_dir(root)
-            A.bpe_vocab_write(m, d)
+            d = pub.new_layout_dir()
+            A.bpe_vocab_write(m, pub.data_path(d))
             if op == "retrain":
-                P.publish(root, d)
+                pub.publish(d)
                 published.append(
                     (d, tuple((l, r, mm) for _, l, r, mm, _ in m)))
         elif op == "read" and published:
@@ -1517,7 +1514,7 @@ def test_differential_vocab_artifact_lifecycle(seed, tmp_path):
                 f"seed={seed}: read != last published"
         elif op == "prune" and published:
             keep = rng.randint(2, 3)
-            deleted = set(P.prune(root, keep=keep))
+            deleted = set(pub.prune(keep=keep))
             published = [(d, t) for d, t in published
                          if d not in deleted]
             if pinned and pinned[0] in deleted:
@@ -1527,7 +1524,8 @@ def test_differential_vocab_artifact_lifecycle(seed, tmp_path):
         if pinned:
             # a resolve()-pinned reader re-reads ITS layout directly,
             # untouched by later publishes (prune(keep>=2) horizon)
-            assert A.bpe_vocab_read(pinned[0]) == pinned[1], \
+            pinned_read = A.bpe_vocab_read(pub.data_path(pinned[0]))
+            assert pinned_read == pinned[1], \
                 f"seed={seed}: pinned reader disturbed"
     if published:
         assert A.bpe_vocab_read(root) == published[-1][1]
@@ -1545,7 +1543,6 @@ def test_differential_nb_model_artifact_lifecycle(spark, seed,
     never partially-merged state); the published-model lineage is
     the prefix-sum of the applied deltas, so merge order can never
     leak into the artifact."""
-    import os
     import random as _r
 
     from samplebatchprocessing_spark.operators import artifacts as A
@@ -1553,7 +1550,7 @@ def test_differential_nb_model_artifact_lifecycle(spark, seed,
 
     rng = _r.Random(65_000 + seed)
     root = str(tmp_path / "nbroot")
-    os.makedirs(root)
+    pub = P.open_root(root)
     vocab = [f"t{j}" for j in range(6)]
 
     def rand_delta():
@@ -1578,10 +1575,10 @@ def test_differential_nb_model_artifact_lifecycle(spark, seed,
         df = spark.createDataFrame(
             [(t, pc, nc) for t, (pc, nc) in new_cnt.items()],
             "tok string, pc long, nc long")
-        d = P.new_layout_dir(root)
-        A.nb_model_write(df, new_np, new_nn, d)
+        d = pub.new_layout_dir()
+        A.nb_model_write(df, new_np, new_nn, pub.data_path(d))
         if publish_it:
-            P.publish(root, d)
+            pub.publish(d)
             model, np_, nn = (new_cnt, new_np, new_nn), new_np, new_nn
 
     model, np_, nn = None, None, None
@@ -1602,7 +1599,7 @@ def test_differential_nb_model_artifact_lifecycle(spark, seed,
                     for t, (pc, nc) in model[0].items()}
             assert rows == want, f"seed={seed}: counts drifted"
         elif op == "prune" and published_once:
-            P.prune(root, keep=2)
+            pub.prune(keep=2)
     if published_once:
         got, gnp, gnn = A.nb_model_read(spark, root)
         assert (gnp, gnn) == (np_, nn)

@@ -828,6 +828,41 @@ def test_object_store_list_is_string_prefix_semantics(tmp_path):
     assert store.list("b/input/a.bin") == ["b/input/a.bin"]
 
 
+def test_object_store_list_walks_only_the_listed_subtree(tmp_path,
+                                                         monkeypatch):
+    """A listing starts its walk at the deepest directory the prefix
+    names in full, so it is priced by that subtree, not by the
+    client root: an index root opened at its parent directory lists
+    one layout without entering the sibling trees.  A prefix naming
+    a missing directory lists nothing."""
+    from samplebatchprocessing_spark.pipeline import manifest
+
+    store = manifest.LocalObjectStoreClient(str(tmp_path))
+    store.put("idx/layout-v00001/part-0.parquet", b"1")
+    store.put("idx/layout-v00002/part-0.parquet", b"2")
+    store.put("other_index/layout-v00001/part-0.parquet", b"3")
+
+    visited = []
+    real_walk = os.walk
+
+    def spy_walk(top, *a, **kw):
+        for entry in real_walk(top, *a, **kw):
+            visited.append(os.path.relpath(entry[0], tmp_path))
+            yield entry
+
+    monkeypatch.setattr(manifest.os, "walk", spy_walk)
+    assert store.list("idx/layout-v00002/") == [
+        "idx/layout-v00002/part-0.parquet"]
+    assert visited == ["idx/layout-v00002"]
+    visited.clear()
+    assert store.list("idx/layout-v0000") == [
+        "idx/layout-v00001/part-0.parquet",
+        "idx/layout-v00002/part-0.parquet"]
+    assert not any(v.startswith("other_index") for v in visited)
+    assert store.list("idx/missing/") == []
+    assert store.list("nowhere/at/all") == []
+
+
 def test_object_store_delete_is_idempotent(tmp_path):
     """ADVICE r10: S3 DELETE of a missing key succeeds — a
     re-entrant sweep racing the copy-then-delete window converges

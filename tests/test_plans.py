@@ -1104,16 +1104,15 @@ def test_lsh_probe_through_pointer_keeps_partition_pruning(
     construction, so routing through an index root changes nothing in
     the physical plan — the bucket PartitionFilters pruning of the
     direct-path gate above must hold identically."""
-    import os
-
     from samplebatchprocessing_spark.operators import dedup as D
     from samplebatchprocessing_spark.operators import publish as P
     doc = load_table(spark, sf_smoke, "documents")
     root = str(tmp_path / "root")
-    v1 = os.path.join(root, "layout-v00001")
-    os.makedirs(root)
-    D.lsh_index_write(doc.filter(F.col("doc_id") >= 10), v1)
-    P.publish(root, v1)
+    pub = P.open_root(root)
+    v1 = pub.new_layout_dir()
+    D.lsh_index_write(doc.filter(F.col("doc_id") >= 10),
+                      pub.data_path(v1))
+    pub.publish(v1)
     small = doc.filter(F.col("doc_id") < 2)
     plan = plan_str(D.lsh_index_probe(spark, root, small))
     assert "PartitionFilters" in plan and "bucket" in plan

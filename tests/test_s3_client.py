@@ -354,7 +354,7 @@ def test_put_if_wire_form_is_quoted(s3):
 def test_put_if_locks_never_appear_in_listings(tmp_path):
     """ADVICE r13 #2: r13 placed lock files in a "<root>.locks"
     SIBLING of the client root, so a client re-rooted at a subtree
-    (the __main__._store_from_uri shape, e.g. root=/bucket/idx) left
+    (the publish.open_root shape, e.g. root=/bucket/idx) left
     "idx.locks/<md5>" keys visible to a client rooted at the parent
     /bucket in bare string-prefix listings.  Locks now live under
     the system tempdir keyed by the backing object's absolute path:

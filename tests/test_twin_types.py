@@ -94,3 +94,37 @@ def test_dsum_split_bigint_equals_direct_decimal_sum(spark):
     n = {r["g"]: (r["s"], r["a"]) for r in new.collect()}
     assert o == n
     assert n[99] == (None, None)
+
+
+def test_dsum_envelope_is_exact_inside_and_raises_outside(spark):
+    """The joint dsum/davg envelope, pinned at its edges under the
+    session's ANSI default: |x| = 9.2e12 (u = 9.2e18 millionths <
+    2^63) sums exactly; |x| = 1e13 fails the bigint cast with
+    CAST_OVERFLOW; and the hi half's N * (u >> 20) < 2^63 holds at
+    1e6 rows of 9.2e12 but raises ARITHMETIC_OVERFLOW at 1.1e6 —
+    never a wrapped sum."""
+    from decimal import Decimal
+
+    from pyspark.sql import functions as F
+
+    from samplebatchprocessing_spark.exprs import davg, dsum
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    vals = [9.2e12, 9200000000000.5, -9.2e12, -0.25]
+    row = (spark.createDataFrame([(v,) for v in vals], "x double")
+           .agg(dsum("x", "s"), davg("x", "a")).first())
+    exact = sum(Decimal(repr(v)) for v in vals)
+    assert row["s"] == float(exact) == 9200000000000.25
+    assert row["a"] == float(exact) / 4
+    for bad in (1e13, -1e13):
+        with pytest.raises(Exception, match="CAST_OVERFLOW"):
+            (spark.createDataFrame([(bad,)], "x double")
+             .agg(dsum("x")).collect())
+
+    def big(n):
+        return (spark.range(n).select(F.lit(9.2e12).alias("x"))
+                .agg(dsum("x", "s")).first()["s"])
+
+    assert big(1_000_000) == 9.2e18
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+        big(1_100_000)
